@@ -57,9 +57,13 @@ object Eager {
       // leaf stats off the ANALYZED plan: forcing optimizedPlan here
       // would run a full optimizer pass on a throwaway QueryExecution
       // (downstream consumers plan from ds.logicalPlan, not this QE) —
-      // measurable driver latency per call at fixture scale
+      // measurable driver latency per call at fixture scale. A leaf
+      // without statistics reports spark.sql.defaultSizeInBytes: that
+      // is unknown, not huge, and must not force a checkpoint
+      val unknown = BigInt(
+        org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes)
       val inputBytes = ds.queryExecution.analyzed.collectLeaves()
-        .map(_.stats.sizeInBytes).sum
+        .map(_.stats.sizeInBytes).filter(_ != unknown).sum
       if (inputBytes >= minBytes) eagerCheckpoint() else ds
     }
   }

@@ -8,9 +8,13 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, GreaterThanOrEqual, IsNotNull, IsNull, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType, TimestampType}
+
+import graft.store.sql.{GraftTable, StatsPrune}
 
 /** Copy-on-write table store over parquet with a single atomic manifest
   * (SURVEY §7.3).
@@ -131,8 +135,9 @@ final class Catalog(val spark: SparkSession, val root: String,
         * relative path, dead-row count))` marks rows of THIS file dead
         * by surrogate id without rewriting it — the sidecar
         * ([[DvIO]]) lists the dead ids. Readers mask
-        * ([[Catalog.readFiles]]); compaction and COW rewrites fold the
-        * mask in (their output carries no dv). Sidecars are immutable:
+        * ([[graft.store.sql.DvMaskedScan]]); compaction and COW
+        * rewrites fold the mask in (their output carries no dv).
+        * Sidecars are immutable:
         * a further delete on the same file writes a NEW sidecar with
         * the union, so time travel reads each snapshot's own mask.
         * Stats stay OUTER bounds (a dead row can only make them loose,
@@ -775,16 +780,22 @@ final class Catalog(val spark: SparkSession, val root: String,
   def readAt(table: String, version: Long): DataFrame = {
     val st = manifestAt(version).get(table)
     val files = st.map(_.files).getOrElse(Vector.empty)
+    requireRetained(s"snapshot v$version of '$table'", files)
+    // the snapshot's OWN schema: a table evolved after `version` still
+    // time-travels to its pre-evolution shape
+    readFiles(table, files, schemaOf(st, table), idColOf(st, table))
+  }
+
+  /** Fail loudly, never serve a silently partial read: every data file
+    * and sidecar `files` reference must still exist. */
+  private def requireRetained(what: String, files: Seq[FileEntry]): Unit = {
     val gone = files.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
       .filterNot(p => io.exists(io.resolve(root, p)))
     if (gone.nonEmpty)
       throw new IllegalStateException(
-        s"snapshot v$version of '$table' references ${gone.size} " +
-          s"vacuumed file(s) (first: ${gone.head}); raise the " +
-          "vacuum retention window to keep older snapshots readable")
-    // the snapshot's OWN schema: a table evolved after `version` still
-    // time-travels to its pre-evolution shape
-    readFiles(table, files, schemaOf(st, table), idColOf(st, table))
+        s"$what references ${gone.size} vacuumed file(s) (first: " +
+          s"${gone.head}); raise the vacuum retention window to keep it " +
+          "readable")
   }
 
   /** Row-level changefeed between two committed snapshots (Delta CDF /
@@ -824,14 +835,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     val toKeys = to.map(f => (f.path, f.dv)).toSet
     val removed = from.filterNot(f => toKeys((f.path, f.dv)))
     val added = to.filterNot(f => fromKeys((f.path, f.dv)))
-    val gone = (removed ++ added)
-      .flatMap(f => f.path +: f.dv.map(_._1).toSeq)
-      .filterNot(p => io.exists(io.resolve(root, p)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"changefeed v$fromVersion..v$toVersion of '$table' references " +
-          s"${gone.size} vacuumed file(s) (first: ${gone.head}); " +
-          "raise the vacuum retention window to keep older feeds readable")
+    requireRetained(s"changefeed v$fromVersion..v$toVersion of '$table'",
+      removed ++ added)
     // both sides read through the TO version's schema: a column added
     // between the versions appears NULL-backfilled on the old image,
     // which is the shape a CDC consumer of the evolved table expects
@@ -974,13 +979,8 @@ final class Catalog(val spark: SparkSession, val root: String,
         s"readAppends v$fromVersion..v$toVersion of '$table': the " +
           "surrogate-id column changed inside the range")
     val added = to.filterNot(f => fromKeys((f.path, f.dv)))
-    val gone = added.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
-      .filterNot(p => io.exists(io.resolve(root, p)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"readAppends v$fromVersion..v$toVersion of '$table' references " +
-          s"${gone.size} vacuumed file(s) (first: ${gone.head}); " +
-          "raise the vacuum retention window to keep the tail readable")
+    requireRetained(s"readAppends v$fromVersion..v$toVersion of '$table'",
+      added)
     readFiles(table, added, schemaOf(toState, table),
       idColOf(toState, table))
   }
@@ -1000,12 +1000,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     * Pre-evolution parquet files read through a widened schema NULL-
     * backfill the added columns (parquet by-name resolution).
     *
-    * Renamed columns (round 16) carry their PRIOR names in the field
-    * metadata under [[Catalog.PriorNamesKey]] — the one annotation
-    * point every reader flows through, so [[readFiles]], fsck, and the
-    * pruning surfaces resolve old-named files without threading the
-    * rename map through every call site. [[readFiles]] strips the
-    * metadata from its output, so result frames stay clean. */
+    * Renamed columns carry their PRIOR names in the field metadata
+    * under [[Catalog.PriorNamesKey]] — the one annotation point every
+    * reader flows through, so [[readFiles]] and the merge pre-pruning
+    * resolve old-named files without threading the rename map through
+    * every call site. [[snapshotOf]] strips the metadata, so result
+    * frames stay clean. */
   private def schemaOf(st: Option[TableState],
       table: String): org.apache.spark.sql.types.StructType = {
     val base = st.flatMap(_.schema).getOrElse(Schemas.registry(table)._1)
@@ -1037,63 +1037,23 @@ final class Catalog(val spark: SparkSession, val root: String,
     st.flatMap(_.statsCols)
       .getOrElse(Schemas.statsColumns.getOrElse(table, Nil))
 
-  /** Scan a file-entry list through `schema`, MASKING deletion vectors
-    * (round 15 merge-on-read): rows of a DV-carrying file whose id is in
-    * its sidecar are invisible. The mask is ONE broadcast anti-join on
-    * (id, source file) pairs — per-file pairing, not a global dead-id
-    * set, because an update's NEW image lives in a patch file under the
-    * SAME id and must stay visible (and a later-patched patch file can
-    * carry both live and dead ids). Dead pairs are changed-rows-sized by
-    * construction (compaction folds them away), so the broadcast is the
-    * size of the recent point-change churn, and files without DVs pay
-    * nothing — the common case keeps the exact pre-DV plan. */
+  /** Scan a file-entry list through `schema` — the one read path every
+    * Scala reader shares with the SQL front door: a DSv2
+    * [[graft.store.sql.GraftTable]] over exactly these files, so
+    * deletion vectors mask through [[graft.store.sql.DvMaskedScan]],
+    * renamed columns coalesce through
+    * [[graft.store.sql.RenameCoalescingScan]], and pushed-down filters
+    * prune files through [[graft.store.sql.StatsPrune]]. A read over
+    * files reports every column nullable, as a parquet file read does
+    * (no file is trusted to honor NOT NULL). */
   private def readFiles(table: String, files: Seq[FileEntry],
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        Catalog.stripPriorNames(schema))
-    else {
-      val base = Catalog.readLogical(spark, schema,
-        files.map(f => s"$root/${f.path}"))
-      val dvd = files.filter(_.dv.isDefined)
-      if (dvd.isEmpty) base
-      else {
-        val pairs = dvd.flatMap { f =>
-          DvIO.read(io, root, f.dv.get._1)
-            .map(id => (id, fileKey(f.path)))
-        }
-        val sp = spark
-        import sp.implicits._
-        val dead = pairs.toDF("__dead_id", "__dead_file")
-        // input_file_name() is non-deterministic — project it below the
-        // join (a join CONDITION must be deterministic)
-        base.withColumn("__graft_src_file", srcFileKey)
-          .join(broadcast(dead),
-            col(idCol) === col("__dead_id") &&
-              col("__graft_src_file") === col("__dead_file"),
-            "left_anti")
-          .drop("__graft_src_file")
-      }
-    }
-
-  /** Executor-side file identity for a scanned row: `input_file_name()`
-    * with the scheme (and, for non-`file:` URIs, the authority)
-    * stripped — a PERCENT-ENCODED absolute path (input_file_name
-    * reports the URL-encoded URI, so '/my store/' appears as
-    * '/my%20store/'; comparisons must stay in encoded space). */
-  private def srcFileKey: org.apache.spark.sql.Column =
-    regexp_replace(
-      regexp_replace(input_file_name(), "^file:/+", "/"),
-      "^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", "")
-
-  /** Driver-side twin of [[srcFileKey]] ([[StoreIO.fileKeyOf]]): the
-    * same percent-encoded absolute path for a manifest-relative path.
-    * [[collectDeadByFile]] additionally fails LOUDLY when a scanned key
-    * matches no manifest entry, so any residual encoding divergence
-    * surfaces as an error — never as a silently-unmasked deletion
-    * vector. */
-  private def fileKey(rel: String): String = io.fileKeyOf(root, rel)
+      schema: StructType, idCol: String): DataFrame = {
+    val (sqlFiles, sch, priors) = snapshotOf(files,
+      if (files.isEmpty) schema else Catalog.nullable(schema))
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      DataSourceV2Relation.create(new GraftTable(spark, io, root, table,
+        None, sqlFiles, sch, idCol, priors), None, None))
+  }
 
   def read(table: String): DataFrame = {
     val st = tableState(table)
@@ -1109,8 +1069,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * reads get [[readAt]]'s loud vacuumed-file check — never a silently
     * partial table. */
   private[store] def sqlSnapshot(table: String, version: Option[Long])
-      : Option[(Vector[Catalog.SqlFile],
-          org.apache.spark.sql.types.StructType, String,
+      : Option[(Vector[Catalog.SqlFile], StructType, String,
           Map[String, Seq[String]])] = {
     val st = version match {
       case Some(v) => manifestAt(v).get(table)
@@ -1118,38 +1077,34 @@ final class Catalog(val spark: SparkSession, val root: String,
     }
     if (st.isEmpty && !Schemas.registry.contains(table)) return None
     val files = st.map(_.files).getOrElse(Vector.empty)
-    if (version.isDefined) {
-      val gone = files.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
-        .filterNot(p => io.exists(io.resolve(root, p)))
-      if (gone.nonEmpty)
-        throw new IllegalStateException(
-          s"snapshot v${version.get} of '$table' references ${gone.size} " +
-            s"vacuumed file(s) (first: ${gone.head}); raise the " +
-            "vacuum retention window to keep older snapshots readable")
-    }
-    // Rename epochs (round 17, closing SURVEY §7.7.1): when live files
-    // still carry a pre-rename column name, the SQL scan reads
-    // prior-name twin columns and coalesces per row
-    // ([[graft.store.sql.RenameCoalescingScan]] — the Scala readers'
-    // readLogical shape), so SELECT works IMMEDIATELY after a rename,
-    // no compaction required. The priors map is passed only while
-    // stale files exist: a file staged AFTER the rename records null
-    // counts for every current column (the stage-time contract), so a
-    // fully migrated layout drops back to the vectorized single-schema
-    // fast path. Pre-null-stats files (rows < 0) can't prove their
-    // epoch and conservatively keep the coalescing read on.
-    val schema = schemaOf(st, table)
+    version.foreach(v => requireRetained(s"snapshot v$v of '$table'", files))
+    val (sqlFiles, schema, priors) = snapshotOf(files, schemaOf(st, table))
+    Some((sqlFiles, schema, idColOf(st, table), priors))
+  }
+
+  /** The scan descriptor of `files` read through `schema`: per-file
+    * pruning stats with deletion vectors loaded, the schema without its
+    * prior-name annotations, and the rename-epoch map (current name ->
+    * prior names) the scan coalesces with. The map is passed only while
+    * a file may still carry a pre-rename name: a file staged AFTER the
+    * rename records null counts for every current column (the
+    * stage-time contract), so a fully migrated layout drops back to the
+    * vectorized single-schema fast path. Pre-null-stats files
+    * (rows < 0) can't prove their epoch and keep the coalescing read
+    * on. */
+  private def snapshotOf(files: Seq[FileEntry], schema: StructType)
+      : (Vector[Catalog.SqlFile], StructType, Map[String, Seq[String]]) = {
     val priorsMap: Map[String, Seq[String]] = schema.fields
       .map(f => f.name -> Catalog.priorsOf(f))
       .filter(_._2.nonEmpty).toMap
     val staleExists = priorsMap.nonEmpty && files.exists(f =>
       f.rows < 0L || !priorsMap.keys.forall(f.nulls.contains))
-    Some((files.map(f =>
+    (files.toVector.map(f =>
         Catalog.SqlFile(f.path, f.minId, f.maxId, f.cols, f.scols,
           f.dv.map(d => (d._1, DvIO.read(io, root, d._1))), f.rows,
           f.nulls)),
-      Catalog.stripPriorNames(schema), idColOf(st, table),
-      if (staleExists) priorsMap else Map.empty))
+      Catalog.stripPriorNames(schema),
+      if (staleExists) priorsMap else Map.empty)
   }
 
   /** Tables the SQL catalog lists: everything with manifest state plus
@@ -1161,26 +1116,24 @@ final class Catalog(val spark: SparkSession, val root: String,
     tableState(table).map(_.maxId).getOrElse(0L)
 
   /** Data-skipping read: rows with `column` in [lo, hi] (inclusive; Long
-    * domain per [[statLong]] — epoch micros for timestamps). Files whose
-    * manifest min/max range provably misses [lo, hi] are never opened;
-    * files WITHOUT stats for the column are conservatively kept, and the
-    * exact predicate is re-applied to the surviving rows — so the result
-    * is correct whether or not any file could be skipped. The manifest
-    * overlap test is a driver-side walk of the (bounded) file list, the
-    * same metadata pass [[liveFiles]] pruning already does for ids. */
+    * domain per [[statLong]] — epoch micros for timestamps). A filter
+    * over [[read]]: the scan's stats pruning never opens files whose
+    * manifest min/max range provably misses [lo, hi], keeps files
+    * WITHOUT stats for the column, and the exact predicate re-applies
+    * to the surviving rows. */
   def readRange(table: String, column: String, lo: Long, hi: Long)
       : DataFrame = {
-    val st = tableState(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val schema = schemaOf(st, table)
-    // renamed columns: a file's stats live under whatever the column
-    // was called at stage time — consult every historical name
-    val keys = Catalog.statKeys(schema, column)
-    val kept = files.filter(f => Catalog.statLookup(f.cols, keys)
-      .forall { case (mn, mx) => mx >= lo && mn <= hi })
-    val scanned = readFiles(table, kept, schema, idColOf(st, table))
-    val c = statLong(scanned, column).getOrElse(col(column).cast("long"))
-    scanned.filter(c >= lo && c <= hi)
+    val df = read(table)
+    // a timestamp compares as itself against micros literals, so the
+    // bounds reach the scan's pruning as column-vs-literal filters
+    val (c, l, h) = df.schema(column).dataType match {
+      case TimestampType =>
+        (col(column), timestamp_micros(lit(lo)), timestamp_micros(lit(hi)))
+      case _ =>
+        (statLong(df, column).getOrElse(col(column).cast("long")),
+          lit(lo), lit(hi))
+    }
+    df.filter(c >= l && c <= h)
   }
 
   /** Timestamp-column overload (inclusive instant range). */
@@ -1193,77 +1146,51 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** String-column overload (inclusive, UTF-8 binary order — the order
     * Spark's default string comparison uses): files whose BOUNDED string
     * stats provably miss [lo, hi] are never opened (bounds are outer, so
-    * skipping is sound; see [[FileEntry.scols]]), and the exact
-    * predicate is re-applied to the surviving rows. */
+    * skipping is sound; see [[FileEntry.scols]]). */
   def readRange(table: String, column: String, lo: String, hi: String)
-      : DataFrame = {
-    val st = tableState(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val schema = schemaOf(st, table)
-    val keys = Catalog.statKeys(schema, column)
-    val kept = files.filter(f => Catalog.statLookup(f.scols, keys)
-      .forall { case (mn, mx) =>
-        Catalog.utf8Compare(mx, lo) >= 0 && Catalog.utf8Compare(mn, hi) <= 0
-      })
-    val scanned = readFiles(table, kept, schema,
-      idColOf(st, table))
-    scanned.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
+      : DataFrame =
+    read(table).filter(col(column) >= lit(lo) && col(column) <= lit(hi))
 
-  /** Null-probe read (round 15): rows where `column IS NULL`
-    * (`isNull = true`) or `IS NOT NULL` — files whose recorded null
-    * counts prove they hold NO matching row are never opened (the J3
-    * left-join-probe shape: a miss scan over a mostly-matched join
-    * column reads only the files that ever saw a NULL). A file without
-    * null stats for the column — pre-round-15, or staged before the
-    * column existed — is conservatively kept, and the exact predicate
-    * re-applies to the survivors. */
+  /** Null-probe read: rows where `column IS NULL` (`isNull = true`) or
+    * `IS NOT NULL` — files whose recorded null counts prove they hold NO
+    * matching row are never opened (the J3 left-join-probe shape: a
+    * miss scan over a mostly-matched join column reads only the files
+    * that ever saw a NULL). A file without null stats for the column is
+    * conservatively kept. */
   def readWhereNull(table: String, column: String,
-      isNull: Boolean): DataFrame = {
-    val st = tableState(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val schema = schemaOf(st, table)
-    val keys = Catalog.statKeys(schema, column)
-    val kept = files.filter(f => Catalog.nullProbeKeeps(f.rows,
-      Catalog.statLookup(f.nulls, keys), isNull))
-    val scanned = readFiles(table, kept, schema,
-      idColOf(st, table))
-    scanned.filter(if (isNull) col(column).isNull else col(column).isNotNull)
-  }
+      isNull: Boolean): DataFrame =
+    read(table).filter(
+      if (isNull) col(column).isNull else col(column).isNotNull)
 
   /** Files [[readWhereNull]] would open vs the live total (test hook). */
   private[graft] def nullProbeFiles(table: String, column: String,
-      isNull: Boolean): (Seq[String], Int) = {
-    val st = readManifest().get(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val keys = Catalog.statKeys(schemaOf(st, table), column)
-    (files.filter(f => Catalog.nullProbeKeeps(f.rows,
-      Catalog.statLookup(f.nulls, keys), isNull))
-      .map(_.path), files.size)
-  }
+      isNull: Boolean): (Seq[String], Int) =
+    prunedFiles(table, column, StringType, a =>
+      Seq(if (isNull) IsNull(a) else IsNotNull(a)))
 
   /** Files [[readRange]] would open for the given range vs the live
     * total (test hook for the skipping behavior). */
   private[graft] def rangeFiles(table: String, column: String,
-      lo: Long, hi: Long): (Seq[String], Int) = {
-    val st = readManifest().get(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val keys = Catalog.statKeys(schemaOf(st, table), column)
-    (files.filter(f => Catalog.statLookup(f.cols, keys)
-      .forall { case (mn, mx) => mx >= lo && mn <= hi }).map(_.path),
-      files.size)
-  }
+      lo: Long, hi: Long): (Seq[String], Int) =
+    prunedFiles(table, column, LongType, a =>
+      Seq(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi))))
 
   /** String twin of [[rangeFiles]] (test hook). */
   private[graft] def rangeFilesStr(table: String, column: String,
-      lo: String, hi: String): (Seq[String], Int) = {
+      lo: String, hi: String): (Seq[String], Int) =
+    prunedFiles(table, column, StringType, a =>
+      Seq(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi))))
+
+  /** Files [[StatsPrune]] keeps for `filters` over `column` vs the live
+    * total. */
+  private def prunedFiles(table: String, column: String, dt: DataType,
+      filters: Attribute => Seq[Expression]): (Seq[String], Int) = {
     val st = readManifest().get(table)
     val files = st.map(_.files).getOrElse(Vector.empty)
-    val keys = Catalog.statKeys(schemaOf(st, table), column)
-    (files.filter(f => Catalog.statLookup(f.scols, keys)
-      .forall { case (mn, mx) =>
-        Catalog.utf8Compare(mx, lo) >= 0 && Catalog.utf8Compare(mn, hi) <= 0
-      }).map(_.path), files.size)
+    val (sqlFiles, _, priors) = snapshotOf(files, schemaOf(st, table))
+    (StatsPrune.prune(sqlFiles, idColOf(st, table),
+      filters(AttributeReference(column, dt)()), priors).map(_.path),
+      files.size)
   }
 
   /** Live file list with id stats — the pruning metadata (test hook). */
@@ -1310,8 +1237,9 @@ final class Catalog(val spark: SparkSession, val root: String,
         Map[String, Long])] =
       if (present.isEmpty) Nil
       else {
-        val df = Catalog.readLogical(spark, schema,
-          present.map(f => s"$root/${f.path}"))
+        // masks off: the claims are about the files' physical rows
+        val df = readFiles(table, present.map(_.copy(dv = None)), schema,
+          idCol)
         val effStats = statsColsOf(st, table)
         val statCols = effStats
           .filter(c => schema.fieldNames.contains(c))
@@ -1426,8 +1354,8 @@ final class Catalog(val spark: SparkSession, val root: String,
               else {
                 val sp = spark
                 import sp.implicits._
-                val present = spark.read.schema(schema)
-                  .parquet(s"$root/${f.path}")
+                val present = readFiles(table, Seq(f.copy(dv = None)),
+                    schema, idCol)
                   .join(broadcast(ids.toSeq.toDF(idCol)), Seq(idCol),
                     "left_semi")
                   .count()
@@ -1594,7 +1522,10 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** Write df as a new file group under the table dir and return its file
     * entries with per-file id stats (one metadata-light job: group rows by
     * their output file). The group name carries a UUID — two writers (even
-    * in different processes) must never collide on a directory. */
+    * in different processes) must never collide on a directory. Spark
+    * writes partition 0's file even when that partition holds no rows;
+    * no entry names such a file, so it is deleted here instead of being
+    * left behind as an orphan. */
   private def stageFiles(table: String, df: DataFrame,
       idCol: String,
       /** The EFFECTIVE stats-column list for this write — callers
@@ -1640,7 +1571,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    stats.map { r =>
+    val entries = stats.map { r =>
       val rel = io.scannedToRel(root, r.getString(0))
       val cols = statCols.flatMap { c =>
         val (mnI, mxI) = (r.fieldIndex(s"mn_$c"), r.fieldIndex(s"mx_$c"))
@@ -1658,6 +1589,19 @@ final class Catalog(val spark: SparkSession, val root: String,
       FileEntry(rel, r.getLong(1), r.getLong(2), cols, scols, None,
         r.getLong(r.fieldIndex("n_rows")), nulls)
     }.toVector.sortBy(_.path)
+    val files = io.list(dir)
+      .filter(e => !e.isDir && e.name.endsWith(".parquet"))
+      .map(e => io.relativize(root, e.path) -> e).toMap
+    // every entry must name a file just written here: a path-mapping
+    // fault must fail the write, never delete the data it misnamed
+    entries.find(f => !files.contains(f.path)).foreach(f =>
+      throw new IllegalStateException(
+        s"staged file '${f.path}' is not among the files written to '$dir'"))
+    (files -- entries.map(_.path)).values.foreach { e =>
+      io.delete(e.path)
+      io.deleteIfExists(io.resolve(dir, s".${e.name}.crc"))
+    }
+    entries
   }
 
   /** Orderable-Long normalization of a designated stats column: epoch
@@ -2174,8 +2118,8 @@ final class Catalog(val spark: SparkSession, val root: String,
       * analogue): a LAYOUT-ONLY commit that rewrites the live file set
       * clustered on one or two designated columns, so every file's
       * min/max stats window is tight on THOSE columns and the stats
-      * pruning surfaces ([[Catalog.readRange]], the SQL door's
-      * file skipping, [[pruneByDomain]] merge pre-pruning) skip files
+      * pruning (every read's file skipping, [[pruneByDomain]] merge
+      * pre-pruning) skips files
       * a conjunctive box predicate provably misses. [[compact]] is the
       * id-clustered special case; this is what the merge scaladoc's
       * "pair the table with a key-clustered layout" refers to — after
@@ -2296,23 +2240,22 @@ final class Catalog(val spark: SparkSession, val root: String,
     /** (manifest file path -> dead ids) of `matched` rows — collected
       * to the driver, which is changed-rows-sized by the merge-on-read
       * contract (the sidecar write needs the ids driver-side anyway).
-      * Attribution resolves each scanned row's encoded file key against
-      * the HIT entries and fails loudly on a miss — a path-encoding
-      * divergence must never become a silent no-op mask. */
+      * Attribution maps each scanned file to its manifest entry
+      * ([[StoreIO.scannedToRel]]) and fails loudly when that is no HIT
+      * entry — a path-mapping fault must never become a silent no-op
+      * mask. */
     private def collectDeadByFile(matched: DataFrame, idCol: String,
         hit: Vector[FileEntry]): Map[String, Vector[Long]] = {
-      val byKey = hit.map(f => fileKey(f.path) -> f.path).toMap
-      matched.select(col(idCol), srcFileKey.as("__f"))
-        .collect()
-        .map { r =>
-          val key = r.getString(1)
-          val rel = byKey.getOrElse(key, throw new IllegalStateException(
-            s"merge-on-read file attribution failed: scanned row of " +
-              s"'$key' matches no hit manifest entry " +
-              "(path-encoding divergence?)"))
-          (rel, r.getLong(0))
+      val hitPaths = hit.map(_.path).toSet
+      matched.select(col(idCol), input_file_name()).collect()
+        .groupBy(_.getString(1)).map { case (scanned, rows) =>
+          val rel = io.scannedToRel(root, scanned)
+          if (!hitPaths(rel))
+            throw new IllegalStateException(
+              s"merge-on-read file attribution failed: scanned file " +
+                s"'$scanned' maps to '$rel', which is no hit manifest entry")
+          rel -> rows.map(_.getLong(0)).toVector
         }
-        .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).toVector }
     }
 
     /** Hit entries with `deadByFile` folded into their deletion
@@ -3008,12 +2951,7 @@ final class Catalog(val spark: SparkSession, val root: String,
           }
           val s0 = hist.getOrElse(src, throw new IllegalArgumentException(
             s"cannot clone '$src' at v$v: table did not exist then"))
-          val gone = s0.files
-            .filterNot(f => io.exists(io.resolve(root, f.path)))
-          if (gone.nonEmpty)
-            throw new IllegalStateException(
-              s"cannot clone '$src' at v$v: ${gone.size} referenced " +
-                s"file(s) vacuumed (first: ${gone.head.path})")
+          requireRetained(s"clone of '$src' at v$v", s0.files)
           s0
       }
       staged :+= Staged(dst, st.copy(
@@ -3071,13 +3009,8 @@ final class Catalog(val spark: SparkSession, val root: String,
           s"cannot restore '$root' to v$version: never committed, or " +
             "already vacuumed past the retention window", e)
     }
-    val gone = hist.values.flatMap(_.files)
-      .filterNot(f => io.exists(io.resolve(root, f.path)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"cannot restore '$root' to v$version: ${gone.size} referenced " +
-          s"file(s) vacuumed (first: ${gone.head.path}); raise the " +
-          "vacuum retention window to keep snapshots restorable")
+    requireRetained(s"restore of '$root' to v$version",
+      hist.values.flatMap(_.files).toSeq)
     tx.restoreStates(hist)
   }
 
@@ -3603,7 +3536,7 @@ object Catalog {
     extends RuntimeException(msg)
 
   /** Field-metadata key carrying a renamed column's PRIOR names (set
-    * by `schemaOf`, consumed by [[readLogical]] and the stat-key
+    * by `schemaOf`, consumed by `snapshotOf` and the stat-key
     * fallbacks; see `TableState.renames`). */
   private[store] val PriorNamesKey = "graft.priorNames"
 
@@ -3643,39 +3576,24 @@ object Catalog {
       }
     })
 
-  /** Read parquet `paths` through a LOGICAL schema whose renamed
-    * fields carry prior names in metadata (round 16): the physical
-    * read schema unions each renamed field with nullable twins under
-    * its prior names — parquet by-name resolution NULL-backfills
-    * whichever names a file lacks, so exactly the name each file
-    * carries supplies the value — and a COALESCE projects them back to
-    * the logical name (a genuine NULL stays NULL: every other twin is
-    * NULL-backfilled by construction). Tables that never renamed read
-    * exactly as before. */
-  private[store] def readLogical(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      paths: Seq[String]): DataFrame = {
-    val renamed = schema.fields.filter(f => priorsOf(f).nonEmpty)
-    if (renamed.isEmpty)
-      spark.read.schema(schema).parquet(paths: _*)
-    else {
-      val physical = org.apache.spark.sql.types.StructType(
-        stripPriorNames(schema).fields.flatMap { f =>
-          f +: priorsOf(schema(f.name)).map(p =>
-            org.apache.spark.sql.types.StructField(p, f.dataType,
-              nullable = true)).toArray
-        })
-      spark.read.schema(physical).parquet(paths: _*)
-        .select(schema.fields.map { f =>
-          val priors = priorsOf(f)
-          if (priors.isEmpty) col(f.name)
-          else coalesce((f.name +: priors).map(col): _*).as(f.name)
-        }.toIndexedSeq: _*)
+  /** `schema` with every field, element and value nullable. */
+  private[store] def nullable(schema: StructType): StructType = {
+    def go(dt: DataType): DataType = dt match {
+      case s: StructType => nullable(s)
+      case org.apache.spark.sql.types.ArrayType(e, _) =>
+        org.apache.spark.sql.types.ArrayType(go(e), containsNull = true)
+      case org.apache.spark.sql.types.MapType(k, v, _) =>
+        org.apache.spark.sql.types.MapType(go(k), go(v),
+          valueContainsNull = true)
+      case other => other
     }
+    StructType(schema.fields.map(f =>
+      f.copy(dataType = go(f.dataType), nullable = true)))
   }
 
-  /** Plain (non-path-dependent) per-file descriptor handed to the SQL
-    * front door: the pruning stats a scan needs and nothing else.
+  /** Plain (non-path-dependent) per-file descriptor every store scan
+    * ([[graft.store.sql.GraftTable]]) reads through: the pruning stats
+    * and the deletion vector a scan needs and nothing else.
     * `minId`/`maxId` are the surrogate-id stats every file carries;
     * `cols`/`scols` as on [[Catalog!.FileEntry]]. */
   private[store] final case class SqlFile(path: String, minId: Long,
@@ -3683,8 +3601,8 @@ object Catalog {
       scols: Map[String, (String, String)],
       /** Deletion vector materialized for the scan: (sidecar path for
         * diagnostics, dead ids ascending). Loaded at snapshot time —
-        * changed-rows-sized; the SQL scan masks rows of THIS file whose
-        * id is in the array ([[graft.store.sql.GraftScanBuilder]]). */
+        * changed-rows-sized; the scan masks rows of THIS file whose
+        * id is in the array ([[graft.store.sql.DvMaskedScan]]). */
       dv: Option[(String, Array[Long])] = None,
       /** Physical row count (-1 unknown) + per-column null counts, the
         * IS NULL / IS NOT NULL pruning stats (see
@@ -3706,12 +3624,12 @@ object Catalog {
     * million-file manifest's string stats stay megabytes. */
   private[store] val StringStatMaxLen = 32
 
-  /** Null-probe keep rule (shared by the Scala read path and the SQL
-    * catalog's [[graft.store.sql.StatsPrune]]): a file is skippable for
-    * an `IS NULL` probe when it recorded ZERO nulls in the column, and
-    * for an `IS NOT NULL` probe when every physical row is null. Both
-    * claims stay sound under deletion vectors (masking only shrinks the
-    * visible subset) and absent stats always keep the file. */
+  /** Null-probe keep rule of [[graft.store.sql.StatsPrune]]: a file is
+    * skippable for an `IS NULL` probe when it recorded ZERO nulls in the
+    * column, and for an `IS NOT NULL` probe when every physical row is
+    * null. Both claims stay sound under deletion vectors (masking only
+    * shrinks the visible subset) and absent stats always keep the
+    * file. */
   private[store] def nullProbeKeeps(rows: Long, nullCount: Option[Long],
       isNull: Boolean): Boolean = nullCount match {
     case None => true

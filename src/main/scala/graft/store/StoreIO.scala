@@ -104,16 +104,18 @@ private[graft] trait StoreIO {
     * shape. Paths come back canonical. */
   def walk(dir: String): Vector[StoreIO.Entry]
 
-  /** Root-relative path of a file reported by `input_file_name()`
-    * (a percent-encoded URI like `file:///...` or `hdfs://nn/...`). */
-  def scannedToRel(root: String, scannedUri: String): String
-
-  /** Driver-side twin of the executor's scheme-stripped
-    * `input_file_name()` key (see [[Catalog]]'s `srcFileKey`): the
-    * percent-encoded absolute path of a root-relative file, scheme and
-    * authority removed. Deletion-vector attribution compares in this
-    * space and fails loudly on a miss. */
-  def fileKeyOf(root: String, rel: String): String
+  /** Root-relative manifest path of a scanned file, as a scan names it
+    * (`input_file_name()`, `PartitionedFile.urlEncodedPath`): a
+    * percent-encoded URI such as `file:///my%20store/...` or
+    * `hdfs://nn/...`. The store's one mapping from a scanned file to
+    * its manifest entry; decoding first keeps roots whose path holds a
+    * space or a `%` addressable. */
+  def scannedToRel(root: String, scannedUri: String): String = {
+    val u = new java.net.URI(scannedUri)
+    relativize(root,
+      if (u.getScheme == null || u.getScheme == "file") u.getPath
+      else new HPath(u).toString)
+  }
 
   /** Hadoop configuration for parquet metadata IO against this store's
     * filesystem ([[CheckpointIO]]'s writer/reader). Pins
@@ -178,10 +180,10 @@ private[graft] object StoreIO {
 }
 
 /** `java.nio.file` implementation — the default for local/POSIX roots;
-  * behavior (including path canonicalization and the percent-encoded
-  * file-key space) is exactly the pre-SPI store's. Non-final so specs
-  * can interpose fault injection on single operations (the
-  * publish-fence race test overrides [[renameIfAbsent]]). */
+  * behavior (including path canonicalization) is exactly the pre-SPI
+  * store's. Non-final so specs can interpose fault injection on single
+  * operations (the publish-fence race test overrides
+  * [[renameIfAbsent]]). */
 private[graft] class LocalStoreIO extends StoreIO {
 
   private def p(s: String) = Paths.get(s)
@@ -293,17 +295,6 @@ private[graft] class LocalStoreIO extends StoreIO {
       }.toVector
       finally it.close()
     }
-
-  override def scannedToRel(root: String, scannedUri: String): String = {
-    val abs = scannedUri.stripPrefix("file://")
-    relativize(root, abs)
-  }
-
-  override def fileKeyOf(root: String, rel: String): String = {
-    val u = p(root).resolve(rel).toAbsolutePath.normalize
-      .toUri.toASCIIString
-    "/" + u.stripPrefix("file:").dropWhile(_ == '/')
-  }
 
   override val hadoopConf: Configuration = {
     val c = new Configuration(false)
@@ -497,34 +488,6 @@ private[graft] final class HadoopStoreIO(conf: Configuration)
       out.result()
     }
   }
-
-  override def scannedToRel(root: String, scannedUri: String): String = {
-    // input_file_name() reports a percent-encoded URI; for local-FS
-    // roots (the CI case) decode via the same nio route the local impl
-    // uses so both impls hand the manifest identical relative paths
-    val abs = scannedUri.stripPrefix("file://")
-    StoreIO.localPathOf(root) match {
-      case Some(rp) =>
-        rp.toAbsolutePath.normalize
-          .relativize(Paths.get(abs).toAbsolutePath.normalize).toString
-      case None =>
-        val b = canon(root)
-        val c = scannedUri
-        if (c.startsWith(b + "/")) c.substring(b.length + 1)
-        else throw new IllegalStateException(
-          s"scanned file '$scannedUri' is not under store root '$b'")
-    }
-  }
-
-  override def fileKeyOf(root: String, rel: String): String =
-    StoreIO.localPathOf(root) match {
-      case Some(rp) =>
-        val u = rp.resolve(rel).toAbsolutePath.normalize.toUri.toASCIIString
-        "/" + u.stripPrefix("file:").dropWhile(_ == '/')
-      case None =>
-        val u = new java.net.URI(canon(resolve(root, rel)))
-        Option(u.getRawPath).getOrElse("/" + rel)
-    }
 
   override val hadoopConf: Configuration = conf
 }

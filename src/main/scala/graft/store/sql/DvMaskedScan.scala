@@ -1,24 +1,29 @@
 package graft.store.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Merge-on-read masking for the SQL front door: wraps the parquet scan
-  * so rows a deletion vector marked dead never surface through
-  * `spark.sql`, Delta-DV-style.
+/** Merge-on-read masking for every store read (the Scala
+  * [[graft.store.Catalog]] readers and the SQL front door share this
+  * scan): wraps the parquet scan so rows a deletion vector marked dead
+  * never surface, Delta-DV-style.
   *
   * Mechanics: input partitions are re-planned ONE FILE PER PARTITION
   * whenever the snapshot carries any DV (per-row file attribution is
   * what makes per-file masks applicable — a packed multi-file partition
   * doesn't delimit files in its row stream), then each partition whose
   * file has a DV reads through a filter on the surrogate-id column
-  * (binary search in the sorted dead-id array).
+  * (binary search in the sorted dead-id array). Which partition holds
+  * which manifest entry is decided once, on the driver, by
+  * [[graft.store.StoreIO.scannedToRel]] over the exact file name the
+  * partition's reader sees; a DV'd entry that no partition maps to
+  * fails loudly instead of serving its dead rows.
   *
-  * The scan stays VECTORIZED (round 18): when the inner parquet
-  * factory reads columnar, the mask computes one selection array per
+  * The scan stays VECTORIZED: when the inner parquet factory reads
+  * columnar, the mask computes one selection array per
   * [[ColumnarBatch]] (survivor row ordinals) and serves the batch
   * through zero-copy [[SelectedColumnVector]] views — the positional-
   * delete shape every columnar engine uses. A batch with no dead rows
@@ -27,22 +32,25 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * types, vectorization off) keep the row filter. The id column is
   * forced into the read schema by [[GraftScanBuilder]] when DVs exist;
   * Spark's projection above the scan restores the user's column
-  * list. */
+  * list. Statistics pass through from the inner scan, so a masked
+  * table still plans broadcast joins by its file sizes. */
 private[store] final class DvMaskedScan(
-    private[store] val inner: Scan,
-    dvByAbsPath: Map[String, Array[Long]], idCol: String)
-    extends Scan with Batch {
+    private[store] val inner: Scan with SupportsReportStatistics,
+    /** Sorted dead ids per DV'd file, keyed by manifest-relative path. */
+    dvByRel: Map[String, Array[Long]],
+    /** Scanned file name -> manifest-relative path. */
+    toRel: String => String, idCol: String)
+    extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = inner.readSchema()
   override def description(): String =
-    s"${inner.description()} [graft: ${dvByAbsPath.size} deletion-" +
+    s"${inner.description()} [graft: ${dvByRel.size} deletion-" +
       "vector-masked file(s)]"
   override def toBatch: Batch = this
+  override def estimateStatistics(): Statistics = inner.estimateStatistics()
 
-  private def innerBatch: Batch = inner.toBatch
-
-  override def planInputPartitions(): Array[InputPartition] =
-    innerBatch.planInputPartitions().flatMap {
+  private lazy val partitions: Array[InputPartition] =
+    inner.toBatch.planInputPartitions().flatMap {
       case fp: FilePartition if fp.files.length > 1 =>
         // split so each partition is attributable to one file
         fp.files.zipWithIndex.map { case (f, i) =>
@@ -51,22 +59,34 @@ private[store] final class DvMaskedScan(
       case p => Seq(p)
     }
 
+  /** Dead ids keyed by the scanned name of each partition's file. */
+  private lazy val deadByScanned: Map[String, Array[Long]] = {
+    val relOf: Map[String, String] = partitions.iterator
+      .collect { case fp: FilePartition => fp.files.iterator }.flatten
+      .map(_.urlEncodedPath).toSet[String].map(s => s -> toRel(s)).toMap
+    val unmapped = dvByRel.keySet -- relOf.values
+    if (unmapped.nonEmpty)
+      throw new IllegalStateException(
+        s"deletion-vector attribution failed: no scanned file maps to " +
+          s"'${unmapped.head}'")
+    relOf.flatMap { case (s, rel) => dvByRel.get(rel).map(s -> _) }
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new DvMaskedReaderFactory(innerBatch.createReaderFactory(),
-      dvByAbsPath, readSchema().fieldIndex(idCol))
+    new DvMaskedReaderFactory(inner.toBatch.createReaderFactory(),
+      deadByScanned, readSchema().fieldIndex(idCol))
 }
 
 private[sql] final class DvMaskedReaderFactory(
-    inner: PartitionReaderFactory, dvByAbsPath: Map[String, Array[Long]],
+    inner: PartitionReaderFactory, deadByScanned: Map[String, Array[Long]],
     idOrdinal: Int) extends PartitionReaderFactory {
 
   private def deadFor(p: InputPartition): Option[Array[Long]] = p match {
     case fp: FilePartition =>
       // single-file partitions by construction (see planInputPartitions)
-      fp.files.headOption.flatMap { f =>
-        val abs = f.toPath.toUri.getPath
-        dvByAbsPath.get(abs)
-      }
+      fp.files.headOption.flatMap(f => deadByScanned.get(f.urlEncodedPath))
     case _ => None
   }
 

@@ -6,14 +6,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.Catalog
+import graft.store.{Catalog, StoreIO}
 
 /** SQL front door to the COW store (Spark DataSourceV2 `TableCatalog`):
   * every consumer of the reference speaks SQL text (db.py:223-463 — all
@@ -45,8 +45,9 @@ import graft.store.Catalog
   *    row-group/footer pushdown all apply unchanged — the graft layer
   *    adds MANIFEST-STATS file skipping on top (files whose recorded
   *    min/max provably miss the predicate are never even listed into
-  *    the scan; [[GraftScanBuilder]]), the readRange pruning surface
-  *    re-expressed in the planner's pushdown hook.
+  *    the scan; [[GraftScanBuilder]]), deletion-vector masking and
+  *    rename coalescing. The Scala [[Catalog]] readers scan through the
+  *    same [[GraftTable]], so both doors share one read path.
   *  - '''Writes route through the engine, or not at all''': `INSERT
   *    INTO` lands as a [[Catalog.append]] (dense engine-assigned ids,
   *    CHECK validation, OCC — the V1 write fallback, see
@@ -113,8 +114,14 @@ final class GraftTableCatalog extends TableCatalog {
     val c = cat
     c.sqlSnapshot(ident.name(), version) match {
       case Some((files, schema, idCol, renamedPriors)) =>
-        new GraftTable(c.spark, storeRoot, ident.name(), version,
-          files, schema, idCol, renamedPriors)
+        // the surrogate id is exposed NULLABLE: reads never produce a
+        // null (the engine assigns every id), but `INSERT INTO` rows
+        // must carry NULL for it, and Spark validates inserted rows
+        // against this schema before the write sees them
+        val exposed = StructType(schema.fields.map(f =>
+          if (f.name == idCol) f.copy(nullable = true) else f))
+        new GraftTable(c.spark, c.io, storeRoot, ident.name(), version,
+          files, exposed, idCol, renamedPriors)
       case None =>
         throw new NoSuchTableException(
           ident.namespace().toSeq :+ ident.name())
@@ -201,9 +208,8 @@ final class GraftTableCatalog extends TableCatalog {
             unsupported("nested column drops are not supported")
           tx.dropColumn(ident.name(), d.fieldNames()(0))
         case r: TableChange.RenameColumn =>
-          // round 16: metadata-only rename (manifest prior-name map);
-          // Scala reads coalesce across epochs, SQL reads require the
-          // layout migrated (compact/OPTIMIZE) — see Catalog.renameColumn
+          // metadata-only rename (manifest prior-name map): reads
+          // coalesce across epochs (RenameCoalescingScan)
           if (r.fieldNames().length != 1)
             unsupported("nested column renames are not supported")
           tx.renameColumn(ident.name(), r.fieldNames()(0), r.newName())
@@ -243,7 +249,9 @@ final class GraftTableCatalog extends TableCatalog {
 /** One store table pinned at one snapshot: the file list and schema are
   * captured at `loadTable` time (snapshot isolation across the whole
   * query, time travel = an older manifest's list + THAT version's
-  * schema).
+  * schema). Every store read scans through one: the SQL catalog's
+  * `loadTable`, and the Scala [[Catalog]] readers over a
+  * `DataSourceV2Relation` of their own file list.
   *
   * Writes: `INSERT INTO` is supported through the V1 write fallback and
   * routes into [[Catalog.append]] — the TRANSACTIONAL append, so SQL
@@ -253,7 +261,7 @@ final class GraftTableCatalog extends TableCatalog {
   * a caller-supplied id would be silently reassigned, so it fails
   * loudly instead). Time-travel handles and
   * `INSERT OVERWRITE` are rejected. */
-private[sql] final class GraftTable(spark: SparkSession,
+private[store] final class GraftTable(spark: SparkSession, io: StoreIO,
     private[sql] val root: String,
     private[sql] val tableName: String,
     private[sql] val travelVersion: Option[Long],
@@ -272,21 +280,14 @@ private[sql] final class GraftTable(spark: SparkSession,
   override def name(): String =
     travelVersion.map(v => s"$tableName@v$v").getOrElse(tableName)
 
-  /** The surrogate id is exposed NULLABLE: reads never produce a null
-    * (the engine assigns every id), but `INSERT INTO` rows must carry
-    * NULL for it — ids are engine-assigned — and Spark validates
-    * inserted rows against this schema before the write sees them. */
-  private val exposedSchema = StructType(tableSchema.fields.map(f =>
-    if (f.name == idCol) f.copy(nullable = true) else f))
-
-  override def schema(): StructType = exposedSchema
+  override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new GraftScanBuilder(spark, root, tableName, files, exposedSchema,
+    new GraftScanBuilder(spark, io, root, tableName, files, tableSchema,
       idCol, options, renamedPriors)
 
   override def newWriteBuilder(
@@ -335,8 +336,8 @@ private[sql] final class GraftTable(spark: SparkSession,
   *     stats columns against the Long-normalized `cols` ranges
   *     (epoch micros for timestamps), string stats against the BOUNDED
   *     `scols` ranges in UTF-8 binary order (bounds are outer, so
-  *     skipping is sound; files without a stat are kept) — the
-  *     [[Catalog.readRange]] rules verbatim;
+  *     skipping is sound; files without a stat are kept) —
+  *     [[StatsPrune]];
   *  2. forward the same filters into the parquet builder, so footer
   *     min/max row-group skipping and the `PushedFilters` the plan
   *     displays are Spark's own;
@@ -345,7 +346,8 @@ private[sql] final class GraftTable(spark: SparkSession,
   *     can never change results, only skip provably-dead IO.
   * Column pruning ([[SupportsPushDownRequiredColumns]]) delegates
   * likewise, so `ReadSchema` is minimal. */
-private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
+private[sql] final class GraftScanBuilder(spark: SparkSession, io: StoreIO,
+    root: String,
     tableName: String, files: Vector[Catalog.SqlFile],
     tableSchema: StructType, idCol: String,
     options: CaseInsensitiveStringMap,
@@ -355,8 +357,6 @@ private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
     extends Dsv2Bridge with SupportsPushDownRequiredColumns {
 
   private var inner: Option[FileScanBuilder] = None
-  /** Files surviving stats pruning vs total (spec observability). */
-  private[sql] var prunedCount: (Int, Int) = (files.size, files.size)
   private var kept: Vector[Catalog.SqlFile] = files
 
   /** Nullable prior-name twin fields: included in the parquet table
@@ -396,7 +396,6 @@ private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
     // manifest-stats pruning sees EVERY filter (prior-name stats keep
     // renamed columns prunable across epochs)...
     val keptNow = StatsPrune.prune(files, idCol, filters, renamedPriors)
-    prunedCount = (keptNow.size, files.size)
     // ...but filters touching a renamed column must NOT reach parquet
     // while stale files live: record-level filtering treats an absent
     // column as all-NULL and would silently drop every pre-rename row.
@@ -432,22 +431,15 @@ private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
   }
 
   override def build(): Scan = {
+    // Spark's parquet scan reports its file sizes; the wrappers pass
+    // them on, so masked and renamed tables still plan broadcasts
     val scan = innerOrAll().build()
+      .asInstanceOf[Scan with SupportsReportStatistics]
     val dvd = kept.filter(_.dv.isDefined)
-    // DV attribution key = the partition file's DECODED absolute path
-    // ([[DvMaskedReaderFactory.deadFor]] reads `toPath.toUri.getPath`,
-    // which drops scheme + authority): scheme-less roots resolve via
-    // java.nio (local dev/CI), URI roots via Hadoop Path — both land in
-    // the same decoded-path comparison space
-    def dvKey(rel: String): String =
-      if (root.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*"))
-        new org.apache.hadoop.fs.Path(s"$root/$rel").toUri.getPath
-      else java.nio.file.Paths.get(root).resolve(rel)
-        .toAbsolutePath.normalize.toString
     val masked =
       if (dvd.isEmpty) scan
-      else new DvMaskedScan(scan,
-        dvd.map(f => dvKey(f.path) -> f.dv.get._2).toMap, idCol)
+      else new DvMaskedScan(scan, dvd.map(f => f.path -> f.dv.get._2).toMap,
+        io.scannedToRel(root, _), idCol)
     if (renamedPriors.isEmpty) masked
     else {
       val innerRead = masked.readSchema()

@@ -1,16 +1,16 @@
 package graft.store.sql
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BinaryComparison, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.store.Catalog
 
-/** Manifest-stats file pruning for the SQL front door: turns the
-  * planner's catalyst filters into per-column [lo, hi] windows and drops
-  * files whose recorded stats provably miss them — the
-  * [[Catalog.readRange]] skipping rules applied to arbitrary SQL
-  * predicates.
+/** Manifest-stats file pruning, the one pruner every store read uses
+  * (the Scala [[Catalog]] readers and the SQL front door both scan
+  * through [[GraftScanBuilder]]): turns the planner's catalyst filters
+  * into per-column [lo, hi] windows and drops files whose recorded
+  * stats provably miss them.
   *
   * Soundness rules (each makes pruning conservative, never lossy):
   *  - only top-level conjuncts constrain (an `OR` arm never prunes);
@@ -22,7 +22,7 @@ import graft.store.Catalog
   *  - every filter stays in the plan anyway (the scan builder reports
   *    parquet's residuals upward), so pruning can only skip IO, never
   *    change results. */
-private[sql] object StatsPrune {
+private[store] object StatsPrune {
 
   /** Per-column inclusive windows extracted from `filters`:
     * Long-normalized (epoch micros for timestamps) and raw-string. */
@@ -48,82 +48,43 @@ private[sql] object StatsPrune {
     case _ => None
   }
 
-  /** (column, lo, hi) in the Long domain, or None. Literal null bounds
-    * are dropped (a null comparison matches nothing; Spark's own Filter
-    * node settles it). */
-  private def longBound(e: Expression): Option[(String, Option[Long], Option[Long])] = {
-    def lit(l: Literal): Option[Long] =
-      Option(l.value).flatMap(asLong(_, l.dataType))
-    e match {
-      case EqualTo(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
-          case l: Literal => Option(l.value).flatMap(asLong(_, l.dataType)).isDefined
-          case _ => false
-        } =>
-        val longs = vs.map { case l: Literal => asLong(l.value, l.dataType).get }
-        Some((a.name, Some(longs.min), Some(longs.max)))
-      case _ => None
+  /** (column, lo, hi) of one comparison conjunct in the domain `conv`
+    * maps literals into, or None. Literal null bounds are dropped (a
+    * null comparison matches nothing; Spark's own Filter node settles
+    * it); an `IN` list bounds by its min and max under `le`. */
+  private def bound[A](e: Expression, conv: (Any, DataType) => Option[A],
+      le: (A, A) => Boolean): Option[(String, Option[A], Option[A])] = {
+    def lit(l: Literal): Option[A] =
+      Option(l.value).flatMap(conv(_, l.dataType))
+    def window(a: Attribute, l: Literal, lower: Boolean, upper: Boolean) =
+      lit(l).map(v => (a.name, Option.when(lower)(v), Option.when(upper)(v)))
+    // `x > l` and `x >= l` bound x from below, `x < l` and `x <= l` from
+    // above; a literal on the left flips the side
+    val below: PartialFunction[Expression, Boolean] = {
+      case _: GreaterThan | _: GreaterThanOrEqual => true
+      case _: LessThan | _: LessThanOrEqual => false
     }
-  }
-
-  /** String twin of [[longBound]]. */
-  private def strBound(e: Expression): Option[(String, Option[String], Option[String])] = {
-    def lit(l: Literal): Option[String] =
-      Option(l.value).flatMap(asStr(_, l.dataType))
     e match {
-      case EqualTo(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
-          case l: Literal => Option(l.value).flatMap(asStr(_, l.dataType)).isDefined
-          case _ => false
-        } =>
-        // min/max in UTF-8 BINARY order (utf8Compare), matching the
-        // order the file stats are compared in — String's UTF-16
-        // code-unit order diverges for supplementary characters and
-        // would invert the window (unsound pruning)
-        val ss = vs.map { case l: Literal => asStr(l.value, l.dataType).get }
-        Some((a.name,
-          Some(ss.reduce((x, y) =>
-            if (Catalog.utf8Compare(x, y) <= 0) x else y)),
-          Some(ss.reduce((x, y) =>
-            if (Catalog.utf8Compare(x, y) >= 0) x else y))))
+      case EqualTo(a: Attribute, l: Literal) => window(a, l, true, true)
+      case EqualTo(l: Literal, a: Attribute) => window(a, l, true, true)
+      case c: BinaryComparison if below.isDefinedAt(c) =>
+        (c.left, c.right) match {
+          case (a: Attribute, l: Literal) => window(a, l, below(c), !below(c))
+          case (l: Literal, a: Attribute) => window(a, l, !below(c), below(c))
+          case _ => None
+        }
+      case In(a: Attribute, vs) if vs.nonEmpty =>
+        val xs = vs.map { case l: Literal => lit(l); case _ => None }
+        if (!xs.forall(_.isDefined)) None
+        else {
+          // min/max in the domain's own order: for strings that is
+          // UTF-8 binary order, the order the file stats compare in —
+          // String's UTF-16 code-unit order diverges for supplementary
+          // characters and would invert the window (unsound pruning)
+          val ys = xs.flatten
+          Some((a.name, Some(ys.reduce((x, y) => if (le(x, y)) x else y)),
+            Some(ys.reduce((x, y) => if (le(x, y)) y else x))))
+        }
       case _ => None
     }
   }
@@ -137,13 +98,15 @@ private[sql] object StatsPrune {
     val conjuncts = filters.flatMap(splitAnd)
     var longs = Map.empty[String, (Long, Long)]
     var strs = Map.empty[String, (String, String)]
+    val longLe = (x: Long, y: Long) => x <= y
+    val strLe = (x: String, y: String) => Catalog.utf8Compare(x, y) <= 0
     conjuncts.foreach { c =>
-      longBound(c).foreach { case (col, lo, hi) =>
+      bound(c, asLong, longLe).foreach { case (col, lo, hi) =>
         val (clo, chi) = longs.getOrElse(col, (Long.MinValue, Long.MaxValue))
         longs += col -> (math.max(clo, lo.getOrElse(Long.MinValue)),
           math.min(chi, hi.getOrElse(Long.MaxValue)))
       }
-      strBound(c).foreach { case (col, lo, hi) =>
+      bound(c, asStr, strLe).foreach { case (col, lo, hi) =>
         val (clo, chi) = strs.getOrElse(col, (null: String, null: String))
         val nlo = (Option(clo) ++ lo)
           .reduceOption((a, b) => if (Catalog.utf8Compare(a, b) >= 0) a else b)

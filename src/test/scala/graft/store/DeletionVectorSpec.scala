@@ -244,4 +244,45 @@ class DeletionVectorSpec extends SparkSuite {
     assert(content(oldSql) ==
       content(cat.readAt("events_ingest", vBefore)))
   }
+
+  test("a second merge-on-read point update of one row leaves no orphan " +
+    "file: fsck stays clean") {
+    val cat = freshCat()
+    cat.append("events_ingest", ev(1 to 3), orderBy = Seq("event_id"))
+    cat.update("events_ingest", col("ingest_id") === 2L,
+      Map("value" -> lit(20.5)))
+    cat.update("events_ingest", col("ingest_id") === 2L,
+      Map("value" -> lit(21.5)))
+    val bad = cat.fsck("events_ingest").filter(!col("ok")).collect()
+    assert(bad.isEmpty, bad.mkString("; "))
+    val rows = content(cat.read("events_ingest"))
+    assert(rows.size == 3)
+    assert(rows.count(_.contains(",21.5,")) == 1 &&
+      !rows.exists(_.contains(",20.5,")), rows)
+  }
+
+  test("a table carrying a DV reports its file size through Catalog.read " +
+    "and spark.table, so it is the broadcast side of a join") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val cat = freshCat()
+    seed(cat)
+    cat.update("events_ingest", col("ingest_id") === 15L,
+      Map("value" -> lit(999.5)))
+    spark.conf.set("spark.sql.catalog.gdvstats",
+      classOf[graft.store.sql.GraftTableCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gdvstats.root", cat.root)
+    // 24 MB by its statistics: above the 10 MB broadcast threshold, so
+    // only the DV table can be the broadcast side
+    val big = spark.range(0L, 3000000L).toDF("ingest_id")
+    Seq("Catalog.read" -> cat.read("events_ingest"),
+        "spark.table" -> spark.table("gdvstats.events_ingest")).foreach {
+      case (door, dv) =>
+        val size = dv.queryExecution.optimizedPlan.stats.sizeInBytes
+        assert(size < BigInt(Long.MaxValue),
+          s"$door: the DV table reports an unknown size")
+        val plan = big.join(dv, "ingest_id").queryExecution.sparkPlan
+        assert(plan.collect { case b: BroadcastHashJoinExec => b }.nonEmpty,
+          s"$door: no broadcast join against the DV table\n$plan")
+    }
+  }
 }
